@@ -194,6 +194,11 @@ def assign_sequential_ids(
     (checkpoint, counts, emission), so 32 partitions of 100 rows is
     pure scheduling overhead, while at fact-table scale the default
     keeps the sort parallel.
+
+    Failure semantics: the ``localCheckpoint`` blocks have no
+    lineage, so losing an executor fails the job instead of
+    recomputing them — not safe under dynamic allocation or
+    executor decommissioning.
     """
     n_part = num_partitions or int(
         df.sparkSession.conf.get("spark.sql.shuffle.partitions", "32")

@@ -75,6 +75,11 @@ def pagerank_integer(
 
     Output: (node, pr) — fixed-point rank, a bigint in units of 1/scale
     ("pr" because RANK is a window-function keyword in both SQL dialects).
+
+    Failure semantics: the ``localCheckpoint`` blocks have no
+    lineage, so losing an executor fails the job instead of
+    recomputing them — not safe under dynamic allocation or
+    executor decommissioning.
     """
     # out_deg is FOLDED into the edge list once before the loop, so
     # each round joins ranks against ONE edge-shaped input instead of
@@ -200,6 +205,11 @@ def hits_integer(
     boundary).
 
     Output: (node, auth, hub) — bigints in units of 1/scale.
+
+    Failure semantics: the ``localCheckpoint`` blocks have no
+    lineage, so losing an executor fails the job instead of
+    recomputing them — not safe under dynamic allocation or
+    executor decommissioning.
     """
     e = (
         edges.select(

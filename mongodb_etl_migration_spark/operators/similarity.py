@@ -25,21 +25,22 @@ from pyspark.sql import functions as F
 from mongodb_etl_migration_spark.functions.scalars import stable_round
 from mongodb_etl_migration_spark.operators.text import (
     lit_long_array,
-    sql_name_ok,
+    sql_expr,
+    sql_ref,
 )
 
 
-# --- SQL-template fast paths for the vector helpers -------------------
+# --- SQL templates for the vector helpers ------------------------------
 # The pyspark higher-order-function builders (F.transform/F.aggregate/
 # F.zip_with) do several py4j round-trips PER LAMBDA, which made the
 # vector-query CONSTRUCTION cost scale with plane count × join sides
 # (sim_bitext_margin: ~3,400 round-trips / 0.6 s socket time per build,
 # r14 cProfile receipt — the same disease pass 6 cured for the gopher
-# folds). Each helper therefore emits its expression as ONE parseable
-# SQL string when given column NAMES / literal vectors, and keeps the
-# original Column form for Column inputs; the two forms build the same
-# resolved tree (CASE/lambda/cast shapes identical; double literals via
-# repr round-trip exactly) and are pinned value-equal by
+# folds). Each vector helper is therefore ONE SQL-fragment builder
+# (``*_sql``: fragments in, fragment out); the public function takes
+# column NAMES, renders them with text.sql_ref (the exact ``F.col``
+# name rules, nested fields included) and parses the whole expression
+# once through text.sql_expr. Values are pinned against numpy by
 # tests/test_vector_sql_forms.py.
 
 def _f8_sql(x: float) -> str:
@@ -47,9 +48,7 @@ def _f8_sql(x: float) -> str:
     decimal and Java's parseDouble lands on the same IEEE-754 value;
     the D suffix makes the parser emit the same DoubleType Literal
     node as ``F.lit(float)``. Non-finite components take the CAST
-    spelling (repr's 'inf'/'nan' would not parse) so the SQL and
-    Column forms stay equivalent for pathological inputs (ADVICE
-    r14)."""
+    spelling (repr's 'inf'/'nan' would not parse)."""
     x = float(x)
     if x != x:
         return "cast('NaN' as double)"
@@ -60,9 +59,10 @@ def _f8_sql(x: float) -> str:
     return f"{x!r}D"
 
 
-def _vec_sql(name: str) -> str:
-    """SQL fragment: the :func:`_dvec` cast-to-double transform."""
-    return f"transform(`{name}`, __vx -> cast(__vx as double))"
+def _vec_sql(v: str) -> str:
+    """SQL fragment: the array fragment ``v`` cast element-wise to
+    double."""
+    return f"transform({v}, __vx -> cast(__vx as double))"
 
 
 def lit_vec_sql(v: Sequence[float]) -> str:
@@ -73,8 +73,8 @@ def lit_vec_sql(v: Sequence[float]) -> str:
 
 
 def dot_sql(a: str, b: str) -> str:
-    """SQL fragment: the :func:`dot` fold over two array fragments.
-    Lambda variables dunder-named so they can never collide with (or
+    """SQL fragment: dot product of two array fragments. Lambda
+    variables dunder-named so they can never collide with (or
     silently shadow) a data column referenced by ``a``/``b``."""
     return (
         f"aggregate(zip_with({a}, {b}, (__zx, __zy) -> __zx * __zy), "
@@ -83,48 +83,42 @@ def dot_sql(a: str, b: str) -> str:
 
 
 def norm_sql(a: str) -> str:
-    """SQL fragment: the :func:`norm` fold over an array fragment."""
+    """SQL fragment: L2 norm of an array fragment."""
     return f"sqrt(aggregate({a}, 0.0D, (__acc, __x) -> __acc + __x * __x))"
 
 
-def _dvec(c: Column | str) -> Column:
-    if isinstance(c, str) and sql_name_ok(c):
-        return F.expr(_vec_sql(c))
-    if isinstance(c, str):
-        c = F.col(c)  # dotted/backticked name: Column path (ADVICE r14)
-    return F.transform(c, lambda x: x.cast("double"))
+def cosine_sql(a: str, b: str) -> str:
+    """SQL fragment: cosine of two array fragments."""
+    return f"{dot_sql(a, b)} / ({norm_sql(a)} * {norm_sql(b)})"
 
 
-def dot(a: Column | str, b: Column | str) -> Column:
-    """Dot product of two array<double> columns. Column names take the
-    one-parse SQL path; Column objects keep the HOF-builder form."""
-    if (
-        isinstance(a, str)
-        and isinstance(b, str)
-        and sql_name_ok(a)
-        and sql_name_ok(b)
-    ):
-        return F.expr(dot_sql(f"`{a}`", f"`{b}`"))
-    a = F.col(a) if isinstance(a, str) else a
-    b = F.col(b) if isinstance(b, str) else b
-    return F.aggregate(
-        F.zip_with(a, b, lambda x, y: x * y), F.lit(0.0), lambda acc, x: acc + x
+def _dvec(name: str) -> Column:
+    """The array column NAMED ``name`` as array<double>."""
+    return sql_expr(_vec_sql(sql_ref(name)))
+
+
+def dot(a: str, b: str) -> Column:
+    """Dot product of the array<double> columns named ``a`` and ``b``."""
+    return sql_expr(dot_sql(sql_ref(a), sql_ref(b)))
+
+
+def norm(a: str) -> Column:
+    """L2 norm of the array<double> column named ``a``."""
+    return sql_expr(norm_sql(sql_ref(a)))
+
+
+def cosine(a: str, b: str) -> Column:
+    """Cosine of the array<double> columns named ``a`` and ``b``."""
+    return sql_expr(cosine_sql(sql_ref(a), sql_ref(b)))
+
+
+def _cosine_to(vec_col: str, query_vec: Sequence[float]) -> Column:
+    """Cosine of the (cast-to-double) column NAMED ``vec_col`` against
+    a literal query vector — the scoring expression of every top-k
+    probe, parsed once."""
+    return sql_expr(
+        cosine_sql(_vec_sql(sql_ref(vec_col)), lit_vec_sql(query_vec))
     )
-
-
-def norm(a: Column | str) -> Column:
-    """L2 norm of an array<double> column (name → one-parse SQL path)."""
-    if isinstance(a, str) and sql_name_ok(a):
-        return F.expr(norm_sql(f"`{a}`"))
-    if isinstance(a, str):
-        a = F.col(a)  # dotted/backticked name: Column path (ADVICE r14)
-    return F.sqrt(
-        F.aggregate(a, F.lit(0.0), lambda acc, x: acc + x * x)
-    )
-
-
-def cosine(a: Column, b: Column) -> Column:
-    return dot(a, b) / (norm(a) * norm(b))
 
 
 def lit_vec(v: Sequence[float]) -> Column:
@@ -154,40 +148,33 @@ def cosine_topk(
     """Brute-force cosine top-k: scan + per-row cosine + global top-k.
     orderBy+limit compiles to TakeOrderedAndProject — a per-partition
     heap and a k-row driver merge, NOT a full sort/shuffle."""
-    q = lit_vec(query_vec)
     return (
         emb.select(
             F.col(id_col),
-            stable_round(cosine(_dvec(vec_col), q), 4).alias("cos_sim"),
+            stable_round(_cosine_to(vec_col, query_vec), 4).alias("cos_sim"),
         )
         .orderBy(F.desc("cos_sim"), F.col(id_col))
         .limit(k)
     )
 
 
-def hyperplane_bucket(
-    vec_col: Column | str, planes: Sequence[Sequence[float]]
-) -> Column:
-    """LSH bucket id: sign bit of the dot product against each plane,
-    concatenated ('110…'). Deterministic given the planes. A column
-    NAME takes the one-parse SQL template (CASE WHEN == the Column
-    form's F.when; see the fast-path note above :func:`_f8_sql`)."""
-    if isinstance(vec_col, str) and sql_name_ok(vec_col):
-        v = _vec_sql(vec_col)
-        bits = ",".join(
-            f"case when {dot_sql(v, lit_vec_sql(p))} >= 0 "
-            "then '1' else '0' end"
-            for p in planes
-        )
-        return F.expr(f"concat({bits})")
-    if isinstance(vec_col, str):
-        vec_col = F.col(vec_col)  # dotted/backticked: Column path
-    v = _dvec(vec_col)
-    bits = [
-        F.when(dot(v, lit_vec(p)) >= 0, F.lit("1")).otherwise(F.lit("0"))
+def hyperplane_bucket_sql(v: str, planes: Sequence[Sequence[float]]) -> str:
+    """SQL fragment: LSH bucket id of the array<double> fragment ``v`` —
+    the sign bit of its dot product against each plane, concatenated
+    ('110…')."""
+    bits = ",".join(
+        f"case when {dot_sql(v, lit_vec_sql(p))} >= 0 then '1' else '0' end"
         for p in planes
-    ]
-    return F.concat(*bits)
+    )
+    return f"concat({bits})"
+
+
+def hyperplane_bucket(
+    vec_col: str, planes: Sequence[Sequence[float]]
+) -> Column:
+    """LSH bucket id of the vector column NAMED ``vec_col`` (see
+    :func:`hyperplane_bucket_sql`). Deterministic given the planes."""
+    return sql_expr(hyperplane_bucket_sql(_vec_sql(sql_ref(vec_col)), planes))
 
 
 def ann_topk_lsh(
@@ -213,7 +200,7 @@ def ann_topk_lsh(
         bucketed.filter(F.col("bucket") == qbucket)
         .select(
             F.col(id_col),
-            stable_round(cosine(_dvec(vec_col), lit_vec(query_vec)), 4).alias("cos_sim"),
+            stable_round(_cosine_to(vec_col, query_vec), 4).alias("cos_sim"),
         )
         .orderBy(F.desc("cos_sim"), F.col(id_col))
         .limit(k)
@@ -253,9 +240,7 @@ def ann_topk_multiprobe(
         bucketed.filter(F.col("bucket").isin(probe_set))
         .select(
             F.col(id_col),
-            stable_round(
-                cosine(_dvec(vec_col), lit_vec(query_vec)), 4
-            ).alias("cos_sim"),
+            stable_round(_cosine_to(vec_col, query_vec), 4).alias("cos_sim"),
         )
         .orderBy(F.desc("cos_sim"), F.col(id_col))
         .limit(k)
@@ -474,20 +459,29 @@ def ivf_probe_topk(
         "1" if sum(float(a) * float(b) for a, b in zip(query_vec, p)) >= 0 else "0"
         for p in planes
     )
-    q = lit_vec(query_vec)
     return (
         spark.read.parquet(path)
         .filter(F.col("bucket") == qbits)
         .select(
             F.col(id_col),
-            stable_round(cosine(_dvec(vec_col), q), 4).alias("cos_sim"),
+            stable_round(_cosine_to(vec_col, query_vec), 4).alias("cos_sim"),
         )
         .orderBy(F.desc("cos_sim"), F.col(id_col))
         .limit(k)
     )
 
 
-def l2_normalize(vec: Column | str) -> Column:
+def _unit_sql(v: str) -> str:
+    """SQL fragment: the array<double> fragment ``v`` scaled to unit
+    L2 norm, the norm bound once per row (see :func:`l2_normalize`)."""
+    return (
+        f"element_at(transform(array({norm_sql(v)}), __n -> "
+        f"transform({v}, __ux -> "
+        f"case when __n = 0.0D then 0.0D else __ux / __n end)), 1)"
+    )
+
+
+def l2_normalize(vec: str) -> Column:
     """Unit-norm embedding (the preprocessing step before cosine ANN —
     normalized vectors turn cosine into dot product).
 
@@ -499,17 +493,7 @@ def l2_normalize(vec: Column | str) -> Column:
     the norm exactly once and exposes it to the inner lambda as a
     bound variable. A zero vector stays the zero vector (x/0 under
     non-ANSI Spark would silently NULL every element)."""
-    v = _dvec(vec)
-    return F.element_at(
-        F.transform(
-            F.array(norm(v)),
-            lambda n: F.transform(
-                v,
-                lambda x: F.when(n == 0.0, F.lit(0.0)).otherwise(x / n),
-            ),
-        ),
-        1,
-    )
+    return sql_expr(_unit_sql(_vec_sql(sql_ref(vec))))
 
 
 def int8_quantize(
@@ -591,7 +575,7 @@ def nearest_centroid_assign(
     )
 
 
-def _quantize(vec_col: Column | str, scale: int) -> Column:
+def _quantize(vec_col: str, scale: int) -> Column:
     """floor(x·scale + 0.5) per element as bigint — the shared
     engine-deterministic quantizer."""
     return F.transform(
@@ -765,26 +749,17 @@ def group_centroids(df: DataFrame, key: str, vec_col: str, dim: int) -> DataFram
     )
 
 
-def matryoshka(vec: Column | str, k: int) -> Column:
+def matryoshka(vec: str, k: int) -> Column:
     """Matryoshka (MRL) truncation: keep the first ``k`` dimensions
     and re-unit-normalize the PREFIX — the serving-side trick that
     trades recall for k/d of the memory and FLOPs when embeddings
     were trained with Matryoshka representation learning. Same
     let-binding shape as l2_normalize (the prefix norm evaluates once
-    per row, not once per element); pure Column, zero shuffle. An
-    all-zero PREFIX — possible even when the full vector is nonzero —
-    stays the zero vector rather than silently NULLing out."""
-    v = F.slice(_dvec(vec), 1, k)
-    return F.element_at(
-        F.transform(
-            F.array(norm(v)),
-            lambda n: F.transform(
-                v,
-                lambda x: F.when(n == 0.0, F.lit(0.0)).otherwise(x / n),
-            ),
-        ),
-        1,
-    )
+    per row, not once per element); one parsed expression, zero
+    shuffle. An all-zero PREFIX — possible even when the full vector
+    is nonzero — stays the zero vector rather than silently NULLing
+    out."""
+    return sql_expr(_unit_sql(f"slice({_vec_sql(sql_ref(vec))}, 1, {int(k)})"))
 
 
 def int8_gram(
@@ -932,9 +907,7 @@ def cosine_topk_batch(
     scored = ex.select(
         F.col("q.query_id").alias("query_id"),
         F.col(id_col),
-        stable_round(cosine(F.col("_v"), F.col("q.qv")), 4).alias(
-            "cos_sim"
-        ),
+        stable_round(cosine("_v", "q.qv"), 4).alias("cos_sim"),
     )
     w = Window.partitionBy("query_id").orderBy(
         F.desc("cos_sim"), F.col(id_col)

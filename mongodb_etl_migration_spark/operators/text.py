@@ -12,6 +12,8 @@ across engines (the DuckDB oracle computes the identical value).
 
 from __future__ import annotations
 
+import re
+
 import pandas as pd
 from pyspark.sql import Column
 from pyspark.sql import functions as F
@@ -68,17 +70,13 @@ def lit_long_array(vals) -> Column:
 def lit_string_array(vals) -> Column:
     """array<string> literal in ONE expr parse (numpy has no py4j
     string-array converter; a SQL array literal does it in a single
-    round-trip). Backslashes and quotes escaped for Spark's default
-    (non-escapedStringLiterals) parser; element values and the
-    array<string> containsNull=false type match the element-wise
-    ``F.array(*[F.lit(s) ...])`` form exactly (tested)."""
+    round-trip). Elements are :func:`_sql_str` literals parsed through
+    :func:`sql_expr`; values and the array<string> containsNull=false
+    type match the element-wise ``F.array(*[F.lit(s) ...])`` form
+    exactly (tested)."""
     if not len(vals):
         return F.array().cast("array<string>")
-    esc = (
-        "'" + str(v).replace("\\", "\\\\").replace("'", "\\'") + "'"
-        for v in vals
-    )
-    return F.expr("array(" + ",".join(esc) + ")")
+    return sql_expr("array(" + ",".join(_sql_str(str(v)) for v in vals) + ")")
 
 
 def cpu_fan_out(df, fan_out: bool | None = None):
@@ -341,13 +339,6 @@ def lang_grams_of(s: Column) -> Column:
         F.sequence(F.lit(1), L), lambda i: F.substring(s, i, F.lit(1))
     )
     return F.concat(tris, unis)
-
-
-def lang_ngrams(c: Column | str) -> Column:
-    """Convenience one-expression form of lang_norm → lang_grams_of.
-    ONLY for literal/short columns — hot paths must stage the norm
-    through a projection first (lang_norm docstring)."""
-    return lang_grams_of(lang_norm(c))
 
 
 def lang_id_ngram(
@@ -2098,6 +2089,11 @@ def bm25_index(
     incremental ingest re-derives the windows from the maintained tf
     via :func:`postings_from_tf` — never from raw text (tested:
     maintained index == from-scratch index over the union).
+
+    Failure semantics: the ``localCheckpoint`` blocks have no
+    lineage, so losing an executor fails the job instead of
+    recomputing them — not safe under dynamic allocation or
+    executor decommissioning.
     """
     for reserved in ("term", "tf", "dl", "df", "tbucket"):
         if id_col == reserved:
@@ -3172,7 +3168,7 @@ def gpt2_apply_reference(
     """Reference byte-level BPE encode: pretokenize, map each
     pretoken's UTF-8 bytes through the GPT-2 alphabet, run the greedy
     merge loop per pretoken. Driver-side ground truth; the plan-side
-    twins are gpt2_encode_batch (pandas UDF) and the compiled Column
+    twins are gpt2_encode_batch (pandas UDF) and the compiled SQL
     chain in gpt2_encoded. Pass a precomputed ``rank`` when encoding
     many texts against a large vocabulary (see bpe_apply_reference)."""
     b2u = gpt2_bytes_to_unicode()
@@ -3195,69 +3191,70 @@ def gpt2_pretokenize(c: Column | str) -> Column:
     return F.regexp_extract_all(_cc(c), F.lit(GPT2_PRETOKEN_RE), 0)
 
 
-# --- SQL-template twins of the BPE encode chain -----------------------
+# --- SQL templates of the BPE encode chain ----------------------------
 # Building the compiled merge chain through the Column API costs a py4j
 # round-trip per F.replace/F.lit (|merges| x _BPE_PASSES of them) plus
 # several per HOF lambda, which made the chat/BPE queries'
-# CONSTRUCTION the dominant residual cost after pass 7 (c_sft_tokens:
-# 4,435 round-trips / 0.73 s build, r14 cProfile receipt). These
-# builders emit the IDENTICAL expression tree as one parseable SQL
-# string — the pass-6 gram-fold device applied to the encode chain.
-# Equivalence with the Column forms is pinned by
-# tests/test_chat_sql_forms.py (adversarial texts + both templates).
+# CONSTRUCTION the dominant residual cost (c_sft_tokens: 4,435
+# round-trips / 0.73 s build, r14 cProfile receipt). Each encode
+# helper is therefore ONE SQL-fragment builder; the public function
+# renders its column name with :func:`sql_ref` and parses the whole
+# chain once through :func:`sql_expr`. Values are pinned against the
+# driver-side reference encoder by tests/test_chat_sql_forms.py.
 
-def sql_name_ok(name: str) -> bool:
-    """True when a column NAME may be interpolated into a SQL template
-    as ``\\`name\\``` — simple top-level names only. A dotted name
-    resolves as a nested-field reference under ``F.col`` but as a
-    literal backticked column in SQL, and an embedded backtick breaks
-    the parse outright; such names fall back to the Column-builder
-    path at every string-name fast-path site (ADVICE r14)."""
-    return "." not in name and "`" not in name
+_ESCAPING_CONF = "spark.sql.parser.escapedStringLiterals"
 
 
-_ESCAPE_CONF_CHECKED: set[str] = set()
+_NAME_PART = r"`(?:[^`]|``)*`|[^.`]+"
+_NAME_RE = re.compile(rf"(?:{_NAME_PART})(?:\.(?:{_NAME_PART}))*")
 
 
-def _assert_default_escaping() -> None:
-    """The SQL templates built on :func:`_sql_str` are only correct
-    under the default ``spark.sql.parser.escapedStringLiterals=false``
-    — under the legacy conf every templated literal silently changes
-    value while the Column twins keep working. Checked ONCE per
-    process (ADVICE r14), loudly. The empty-set fast path matters:
-    ``getActiveSession`` is a ~0.5 ms py4j round-trip and _sql_str
-    runs per template LITERAL — probing the JVM before the memo
-    would re-create the construction-cost disease the templates
-    exist to fix (measured: +0.7 ms/literal)."""
-    if _ESCAPE_CONF_CHECKED:
-        return
-    from pyspark.sql import SparkSession
+def sql_ref(name: str) -> str:
+    """SQL rendering of a column NAME exactly as ``F.col`` parses it:
+    dots split nested fields, backticks quote a part (so ```a.b``` is
+    one top-level column), and a doubled backtick inside quotes
+    escapes one. Quoted parts are already in SQL form; bare parts get
+    backticked. Malformed names raise like ``F.col`` does."""
+    if not _NAME_RE.fullmatch(name):
+        raise ValueError(f"malformed column name {name!r}")
+    return ".".join(
+        p if p.startswith("`") else f"`{p}`"
+        for p in re.findall(_NAME_PART, name)
+    )
 
-    s = SparkSession.getActiveSession()
-    if s is None:
-        return
-    key = s.sparkContext.applicationId
-    if (
-        s.conf.get("spark.sql.parser.escapedStringLiterals", "false")
-        .lower()
-        == "true"
-    ):
-        raise ValueError(
-            "spark.sql.parser.escapedStringLiterals=true: the SQL-"
-            "templated literal fast paths (GPT-2 merges, vector "
-            "planes, gram folds) would silently mis-escape under the "
-            "legacy parser — disable the conf or use the Column forms"
-        )
-    _ESCAPE_CONF_CHECKED.add(key)
+
+def sql_expr(fragment: str) -> Column:
+    """The single point where a helper's SQL fragment becomes a Column.
+    :func:`_sql_str` literals are only correct under the default
+    ``spark.sql.parser.escapedStringLiterals=false`` — under the
+    legacy conf every escaped literal silently changes value — so a
+    fragment carrying an escape is refused when the ACTIVE session
+    runs the legacy parser: one conf read per template, checked on
+    every build. A fragment with no backslash reads the same under
+    both parsers and skips the read."""
+    if "\\" in fragment:
+        from pyspark.sql import SparkSession
+
+        s = SparkSession.getActiveSession()
+        if (
+            s is not None
+            and s.conf.get(_ESCAPING_CONF, "false").lower() == "true"
+        ):
+            raise ValueError(
+                f"{_ESCAPING_CONF}=true: the SQL-templated literals "
+                "(GPT-2 merges, chat templates, string arrays) would "
+                "silently mis-escape under the legacy parser — "
+                "disable the conf"
+            )
+    return F.expr(fragment)
 
 
 def _sql_str(s: str) -> str:
     """SQL string literal under the default escape-processing parser:
     backslash/quote/control characters escaped, everything else (incl.
     the GPT-2 alphabet's non-ASCII codepoints) passes through raw.
-    Raises if the session runs the legacy escaping parser
-    (:func:`_assert_default_escaping`)."""
-    _assert_default_escaping()
+    Only parse it through :func:`sql_expr`, which refuses the legacy
+    escaping parser."""
     out = (
         s.replace("\\", "\\\\")
         .replace("'", "\\'")
@@ -3270,7 +3267,7 @@ def _sql_str(s: str) -> str:
 
 def sql_int_array(vals) -> str:
     """SQL fragment: array<int> literal (empty arrays keep the typed
-    cast the Column form uses)."""
+    cast :func:`lit_int_array` uses)."""
     vals = list(vals)
     if not vals:
         return "cast(array() as array<int>)"
@@ -3291,7 +3288,7 @@ def bpe_encoded_word_sql(
     inp: str, merges: list[tuple[str, str]] | None = None
 ) -> str:
     """SQL fragment: :func:`bpe_encoded_word`'s compiled merge chain
-    over the fragment ``inp`` (typically a lambda variable)."""
+    over the fragment ``inp`` (a lambda variable of the GPT-2 chain)."""
     merges = BPE_MERGES if merges is None else merges
     _validate_flat_merges(merges)
     s = f"concat(' ', regexp_replace({inp}, '(.)', '$1 '))"
@@ -3320,8 +3317,7 @@ def gpt2_encoded_sql(inp: str, merges: list[tuple[str, str]]) -> str:
 
 def gpt2_vocab_map_sql(merges: list[tuple[str, str]]) -> str:
     """SQL fragment: the rank-ordered symbol→id literal map of
-    :func:`gpt2_token_ids` (same array<string>/array<int> element
-    types as the Column form's lit_string_array/lit_int_array)."""
+    :func:`gpt2_token_ids` (array<string> keys, array<int> ids)."""
     vocab = gpt2_vocab(merges)
     syms = list(vocab)
     keys = "array(" + ",".join(_sql_str(s) for s in syms) + ")"
@@ -3332,7 +3328,7 @@ def gpt2_vocab_map_sql(merges: list[tuple[str, str]]) -> str:
 def gpt2_token_ids_sql(inp: str, merges: list[tuple[str, str]]) -> str:
     """SQL fragment: :func:`gpt2_token_ids` over the fragment ``inp``
     (split → filter-empty → literal-map lookup, try_element_at so an
-    out-of-alphabet symbol yields NULL exactly like the Column form)."""
+    out-of-alphabet symbol yields a NULL id)."""
     enc = gpt2_encoded_sql(inp, merges)
     m = gpt2_vocab_map_sql(merges)
     return (
@@ -3341,34 +3337,21 @@ def gpt2_token_ids_sql(inp: str, merges: list[tuple[str, str]]) -> str:
     )
 
 
-def gpt2_encoded(
-    c: Column | str, merges: list[tuple[str, str]]
-) -> Column:
-    """Byte-level BPE encode as a zero-shuffle Column chain: pretoken
-    array → GPT-2 byte alphabet (F.translate for the three ASCII
-    whitespace bytes; printable ASCII is identity by construction) →
-    the compiled merge chain per pretoken. ASCII-text scope — any
-    other byte needs UTF-8 decomposition, which is the batch path's
-    job (gpt2_encode_batch, same results where scopes overlap,
-    tested). Returns the document's space-joined symbol string
-    (symbols never contain a literal space — the alphabet maps it
-    away — so the join is unambiguous). A column NAME takes the
-    one-parse SQL template (identical tree; see the builders above);
-    Column inputs keep the builder form."""
-    if isinstance(c, str) and sql_name_ok(c):
-        return F.expr(gpt2_encoded_sql(f"`{c}`", merges))
-    if isinstance(c, str):
-        c = F.col(c)  # dotted/backticked name: Column path (ADVICE r14)
-    pretoks = gpt2_pretokenize(c)
-    mapped = F.transform(
-        pretoks, lambda t: F.translate(t, " \t\n", "ĠĉĊ")
-    )
-    enc = F.transform(mapped, lambda w: bpe_encoded_word(w, merges))
-    joined = F.array_join(enc, "")
-    return F.trim(F.regexp_replace(joined, " +", " "))
+def gpt2_encoded(c: str, merges: list[tuple[str, str]]) -> Column:
+    """Byte-level BPE encode of the column NAMED ``c`` as one
+    zero-shuffle expression: pretoken array → GPT-2 byte alphabet
+    (translate for the three ASCII whitespace bytes; printable ASCII
+    is identity by construction) → the compiled merge chain per
+    pretoken (:func:`gpt2_encoded_sql`, parsed once). ASCII-text
+    scope — any other byte needs UTF-8 decomposition, which is the
+    batch path's job (gpt2_encode_batch, same results where scopes
+    overlap, tested). Returns the document's space-joined symbol
+    string (symbols never contain a literal space — the alphabet maps
+    it away — so the join is unambiguous)."""
+    return sql_expr(gpt2_encoded_sql(sql_ref(c), merges))
 
 
-def gpt2_token_count(c: Column | str, merges: list[tuple[str, str]]) -> Column:
+def gpt2_token_count(c: str, merges: list[tuple[str, str]]) -> Column:
     """Per-document byte-level BPE token count off gpt2_encoded's
     symbol string (0 for empty docs)."""
     s = gpt2_encoded(c, merges)
@@ -3460,9 +3443,7 @@ def token_ids_dedup(
     )
 
 
-def gpt2_token_ids(
-    c: Column | str, merges: list[tuple[str, str]]
-) -> Column:
+def gpt2_token_ids(c: str, merges: list[tuple[str, str]]) -> Column:
     """INTEGER token ids for a document — gpt2_encoded's symbol
     string looked up through the gpt2_vocab id table as one literal
     map (256+|merges| entries ride the plan; the executor-shipped
@@ -3478,32 +3459,14 @@ def gpt2_token_ids(
     t_bpe_ids publishes) and route non-ASCII corpora through
     gpt2_encode_ids_batch, the lossless full-UTF-8 path.
 
-    A column NAME takes the one-parse SQL template (identical tree;
-    see the builders below gpt2_pretokenize); Column inputs keep the
-    builder form.
+    The ids come from ONE parsed template (:func:`gpt2_token_ids_sql`):
+    a single reference to the (expensive, un-CSE'd) merge chain —
+    split evaluates it once and the empty document's [''] filters
+    away — and try_element_at, so a symbol outside the 256-char
+    alphabet yields a NULL id instead of an ANSI
+    MAP_KEY_DOES_NOT_EXIST job abort.
     """
-    if isinstance(c, str) and sql_name_ok(c):
-        return F.expr(gpt2_token_ids_sql(f"`{c}`", merges))
-    if isinstance(c, str):
-        c = F.col(c)  # dotted/backticked name: Column path (ADVICE r14)
-    vocab = gpt2_vocab(merges)
-    syms = list(vocab)
-    id_map = F.map_from_arrays(
-        lit_string_array(syms), lit_int_array([vocab[s] for s in syms])
-    )
-    # ONE reference to the (expensive, un-CSE'd) merge-chain column:
-    # split evaluates it once; the empty document's [''] filters away
-    # instead of a when() guard that would re-evaluate the chain.
-    # try_element_at: a symbol outside the 256-char alphabet (this
-    # Column path's documented ASCII scope — non-ASCII flows through
-    # gpt2_encoded unmapped) yields a NULL id instead of an ANSI
-    # MAP_KEY_DOES_NOT_EXIST job abort; the batch path
-    # (gpt2_encode_ids_batch) is the lossless full-UTF-8 route.
-    enc = gpt2_encoded(c, merges)
-    return F.transform(
-        F.filter(F.split(enc, " "), lambda s: s != ""),
-        lambda s: F.try_element_at(id_map, s).cast("int"),
-    )
+    return sql_expr(gpt2_token_ids_sql(sql_ref(c), merges))
 
 
 def gpt2_decode_ascii(
@@ -4682,7 +4645,13 @@ def bpe_train(
     receives {'rounds': N, 'batch_sizes': [...], 'mode': ...} for
     round-count receipts (driver mode: rounds == 0 and
     'touched_symbols' — zero vocabulary-sized recounts is the
-    point)."""
+    point).
+
+    Failure semantics: the ``localCheckpoint`` blocks have no
+    lineage, so losing an executor fails the job instead of
+    recomputing them — not safe under dynamic allocation or
+    executor decommissioning.
+    """
     if mode not in ("auto", "driver", "distributed"):
         raise ValueError(f"unknown bpe_train mode {mode!r}")
     spark = df.sparkSession

@@ -281,20 +281,6 @@ def _viterbi_pieces(word: Column, state: Column) -> Column:
     return F.when(feasible, walked["ps"])
 
 
-def unigram_pieces(
-    word: Column | str, costs: list[tuple[str, int]], max_piece_len: int
-) -> Column:
-    """Best segmentation of a single-word column as array<string>
-    (NULL = not coverable). The cost table folds into the plan as a
-    literal map — zero shuffle, zero UDF."""
-    w = F.col(word) if isinstance(word, str) else word
-    cm = _cost_map(costs)
-    # one projection materializes the DP struct; the caller-visible
-    # expression only extracts from it
-    st = _viterbi_state(w, cm, max_piece_len)
-    return _viterbi_pieces(w, st)
-
-
 def unigram_token_ids(
     text: Column | str,
     vocab: list[tuple[str, int, int]],
@@ -474,7 +460,13 @@ def unigram_train(
     the SAME spec DP (viterbi_segment_reference) in a mapInPandas
     stage with the costs as an O(1) Python dict — trajectory-
     identical by construction and by test. ``"auto"`` (default) takes
-    arrow above :data:`COLUMN_VOCAB_MAX` pieces."""
+    arrow above :data:`COLUMN_VOCAB_MAX` pieces.
+
+    Failure semantics: the ``localCheckpoint`` blocks have no
+    lineage, so losing an executor fails the job instead of
+    recomputing them — not safe under dynamic allocation or
+    executor decommissioning.
+    """
     if seed_size > DRIVER_VOCAB_MAX:
         raise ValueError(
             f"seed_size={seed_size} exceeds DRIVER_VOCAB_MAX="

@@ -36,20 +36,6 @@ def set_membership_violations(
     return facts.select(key).distinct().join(dim.select(key), key, "left_anti")
 
 
-def count_reconciliation(
-    source_count: int, target_count: int, tolerance: float = 0.05
-) -> bool:
-    """A1: record-count gate with tolerance —
-    validate_migration.py:50-131 (5% default, 10% docs). NOTE: the
-    reference checks ONLY the lower bound (validate_migration.py:56 —
-    a duplicated double-load passes its gate); this mirrors that
-    behavior for parity. Callers wanting symmetry should also assert
-    ``target_count <= source_count * (1 + tolerance)``."""
-    if source_count == 0:
-        return target_count == 0
-    return target_count >= source_count * (1 - tolerance)
-
-
 def group_count(df: DataFrame, cols: Sequence[str]) -> DataFrame:
     """A2: group-by counts — validate_migration.py:656-658."""
     return df.groupBy(*cols).agg(F.count("*").alias("cnt"))

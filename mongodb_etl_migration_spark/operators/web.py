@@ -1173,6 +1173,11 @@ def sitemap_frontier(
     cut lineage growth, with already-fetched URLs anti-joined away so
     a self-referencing index cannot loop. Output: one row per
     discovered URL — (sitemap_url, loc, lastmod, depth).
+
+    Failure semantics: the ``localCheckpoint`` blocks have no
+    lineage, so losing an executor fails the job instead of
+    recomputing them — not safe under dynamic allocation or
+    executor decommissioning.
     """
     spark = pages.sparkSession
     cur = seeds.select(F.col(seed_col).alias("__sm_url")).distinct()

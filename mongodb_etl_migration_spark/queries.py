@@ -8524,13 +8524,12 @@ def w_crawl_curation(spark: SparkSession, sf_dir: str) -> DataFrame:
     """END-TO-END crawl curation over the file-based WARC source —
     the composition a Common-Crawl-style pipeline actually runs:
     format("warc") over on-disk .warc/.warc.gz shards, the standard
-    predicate (response records, HTTP 200) PUSHED INTO the Python
-    source so non-matching records die before the Python→JVM
-    transfer, HTML→text extraction, token counting, and a
+    predicate (response records, HTTP 200) as a Spark Filter right
+    above the scan, HTML→text extraction, token counting, and a
     deterministic ≤10-docs-per-host cap (stratified_take). The
     oracle predicts every surviving row analytically from the shard
     fixture, so a hash match proves the whole chain — gzip members,
-    WARC framing, HTTP unwrap, pushdown, extraction, capping — ran
+    WARC framing, HTTP unwrap, filtering, extraction, capping — ran
     end to end. Only shuffle: the per-host cap's single exchange
     (map-side WindowGroupLimit)."""
     from mongodb_etl_migration_spark.operators import sampling as SM

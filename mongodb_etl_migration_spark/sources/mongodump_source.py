@@ -157,111 +157,6 @@ def _project(v, dtype: DataType):
     return None
 
 
-def _filter_column(f) -> tuple | None:
-    """Top-level column path of a pushable filter; None → unsupported."""
-    from pyspark.sql.datasource import Not
-
-    if isinstance(f, Not):
-        return _filter_column(f.child)
-    attr = getattr(f, "attribute", None)
-    if attr is None or len(attr) != 1:  # nested paths stay Spark-side
-        return None
-    return attr
-
-
-def _filter_supported(f) -> bool:
-    from pyspark.sql.datasource import (
-        EqualNullSafe,
-        EqualTo,
-        GreaterThan,
-        GreaterThanOrEqual,
-        In,
-        IsNotNull,
-        IsNull,
-        LessThan,
-        LessThanOrEqual,
-        Not,
-        StringContains,
-        StringEndsWith,
-        StringStartsWith,
-    )
-
-    if isinstance(f, Not):
-        return _filter_supported(f.child)
-    return _filter_column(f) is not None and isinstance(
-        f,
-        (
-            EqualTo, EqualNullSafe, In,
-            GreaterThan, GreaterThanOrEqual, LessThan, LessThanOrEqual,
-            IsNull, IsNotNull,
-            StringStartsWith, StringEndsWith, StringContains,
-        ),
-    )
-
-
-def _eval_filter(f, doc: dict):
-    """SQL three-valued evaluation over a decoded document: True /
-    False / None (unknown — NULL operand). A row survives only on
-    True; Not flips True/False and preserves None, exactly the SQL
-    rule that lets accepted filters be enforced here without Spark
-    re-checking them."""
-    from pyspark.sql.datasource import (
-        EqualNullSafe,
-        EqualTo,
-        GreaterThan,
-        GreaterThanOrEqual,
-        In,
-        IsNotNull,
-        IsNull,
-        LessThan,
-        LessThanOrEqual,
-        Not,
-        StringContains,
-        StringEndsWith,
-        StringStartsWith,
-    )
-
-    if isinstance(f, Not):
-        inner = _eval_filter(f.child, doc)
-        return None if inner is None else not inner
-    v = doc.get(_filter_column(f)[0])
-    if isinstance(f, IsNull):
-        return v is None
-    if isinstance(f, IsNotNull):
-        return v is not None
-    if isinstance(f, EqualNullSafe):
-        return v == f.value if v is not None and f.value is not None else (
-            v is None and f.value is None
-        )
-    if v is None or getattr(f, "value", None) is None:
-        return None
-    try:
-        if isinstance(f, EqualTo):
-            return v == f.value
-        if isinstance(f, In):
-            vals = [x for x in f.value if x is not None]
-            if v in vals:
-                return True
-            return None if len(vals) != len(f.value) else False
-        if isinstance(f, GreaterThan):
-            return v > f.value
-        if isinstance(f, GreaterThanOrEqual):
-            return v >= f.value
-        if isinstance(f, LessThan):
-            return v < f.value
-        if isinstance(f, LessThanOrEqual):
-            return v <= f.value
-        if isinstance(f, StringStartsWith):
-            return isinstance(v, str) and v.startswith(f.value)
-        if isinstance(f, StringEndsWith):
-            return isinstance(v, str) and v.endswith(f.value)
-        if isinstance(f, StringContains):
-            return isinstance(v, str) and f.value in v
-    except TypeError:  # incomparable types: unknown, not a crash
-        return None
-    return None
-
-
 class _FilePartition(InputPartition):
     def __init__(self, path: str):
         self.path = path
@@ -274,23 +169,12 @@ class MongodumpReader(DataSourceReader):
         self._mode = options.get("mode", "FAILFAST").upper()
         if self._mode not in ("FAILFAST", "PERMISSIVE"):
             raise ValueError(f"mode must be FAILFAST|PERMISSIVE, got {self._mode}")
-        self._filters: list = []
 
-    def pushFilters(self, filters):
-        """Accept top-level-column filters this reader can evaluate
-        EXACTLY on decoded values (Spark does not re-apply accepted
-        filters, so anything uncertain is handed back): equality, In,
-        comparisons, null checks, string prefix/suffix/contains, and
-        Not over those. Pushing matters twice here: non-matching
-        documents are dropped BEFORE the Python->JVM row transfer
-        (the scan's dominant cost), and filter columns join the
-        field-skip 'wanted' set so rejected docs only ever decode the
-        filtered fields."""
-        for f in filters:
-            if _filter_supported(f):
-                self._filters.append(f)
-            else:
-                yield f
+    # No pushFilters: Spark 4.1 caches the reader that accepted a
+    # pushdown on the relation and hands it to every later scan of the
+    # same DataFrame, including scans that pushed nothing — a filter
+    # accepted here would silently apply to them too. Spark keeps every
+    # Filter instead.
 
     def partitions(self):
         return [_FilePartition(p) for p in self._files]
@@ -312,10 +196,8 @@ class MongodumpReader(DataSourceReader):
             (i for i, f in enumerate(fields) if f.name == "_corrupt_record"),
             None,
         )
-        # field-skip pruning: decode only projected + filtered fields
-        filter_cols = {_filter_column(f)[0] for f in self._filters}
-        types = {f.name: f.dataType for f in fields}
-        wanted = frozenset({f.name for f in fields} | filter_cols)
+        # field-skip pruning: decode only the schema's fields
+        wanted = frozenset(f.name for f in fields)
         pos = 0
         while pos < len(buf):
             try:
@@ -332,34 +214,9 @@ class MongodumpReader(DataSourceReader):
                         f"{partition.path}: undecodable tail of "
                         f"{len(buf) - pos} bytes at offset {pos}"
                     )
-                    # the marker row passes the same filter gate as any
-                    # row (accepted filters are NOT re-applied by Spark;
-                    # an IsNotNull predicate must not leak an all-NULL
-                    # marker into the result)
-                    marker = dict(zip([f.name for f in fields], row))
-                    if all(
-                        _eval_filter(f, marker) is True
-                        for f in self._filters
-                    ):
-                        yield tuple(row)
+                    yield tuple(row)
                 return
-            # filters evaluate on the PROJECTED (schema-typed) values,
-            # not raw decoded BSON: a mixed-type field projects int 5
-            # to "5" under a string schema, and EqualTo(col, "5") must
-            # see what Spark will see — accepted filters are enforced
-            # here exactly once. Project the FILTER columns first so a
-            # rejected document never pays the full-schema projection.
-            proj = {
-                c: _project(doc.get(c), types[c]) for c in filter_cols
-            }
-            if not all(_eval_filter(f, proj) is True for f in self._filters):
-                continue
-            yield tuple(
-                proj[f.name]
-                if f.name in proj
-                else _project(doc.get(f.name), f.dataType)
-                for f in fields
-            )
+            yield tuple(_project(doc.get(f.name), f.dataType) for f in fields)
 
 
 class MongodumpStreamReader(SimpleDataSourceStreamReader):
@@ -567,8 +424,5 @@ class MongodumpWriter(DataSourceWriter):
 
 
 def register_mongodump(spark) -> None:
-    """Register the source on a session (idempotent) and enable
-    Python-data-source filter pushdown (off by default in Spark 4.1;
-    runtime-settable)."""
-    spark.conf.set("spark.sql.python.filterPushdown.enabled", "true")
+    """Register the source on a session (idempotent)."""
     spark.dataSource.register(MongodumpDataSource)

@@ -23,12 +23,12 @@ Content-Length-framed with no sync markers and gzip members can only
 be found by scanning, so a mid-file split cannot locate a record
 boundary; crawl corpora are naturally many ~1 GB shards, which is the
 parallelism unit (same rationale as mongodump_source for .bson).
-Filter pushdown (warc_type = 'response' is THE standard crawl
-predicate — request/metadata records are typically 2/3 of a shard)
-drops records before the Python→JVM row transfer, the scan's dominant
-cost. Options: ``path``, ``mode`` (FAILFAST default | PERMISSIVE —
-keep each file's valid prefix past a corrupt record/gzip member and
-emit a ``_corrupt_record`` marker row for dead-letter routing),
+Filters stay in Spark: like mongodump_source, the reader accepts no
+pushdown, because Spark 4.1 reuses an accepting reader for later scans
+of the same DataFrame that pushed nothing. Options: ``path``,
+``mode`` (FAILFAST default | PERMISSIVE — keep each file's valid
+prefix past a corrupt record/gzip member and emit a
+``_corrupt_record`` marker row for dead-letter routing),
 ``with_bytes`` (true appends a ``body_bytes`` binary column carrying
 the raw undecoded payload — the byte-exact path for binary response
 bodies such as images/gzip; off by default so text pipelines don't
@@ -57,11 +57,6 @@ from pyspark.sql.types import (
     StructType,
 )
 
-from mongodb_etl_migration_spark.sources.mongodump_source import (
-    _eval_filter,
-    _filter_column,
-    _filter_supported,
-)
 from mongodb_etl_migration_spark.sources.warc import (
     iter_warc_stream,
     parse_http_response,
@@ -114,22 +109,7 @@ class WarcReader(DataSourceReader):
             raise ValueError(
                 f"mode must be FAILFAST|PERMISSIVE, got {self._mode}"
             )
-        self._filters: list = []
-
-    def pushFilters(self, filters):
-        """Accept the same exactly-evaluable filter family as
-        mongodump_source (equality/In/comparisons/null checks/string
-        prefix-suffix-contains and Not over those) on any output
-        column. All columns exist on the row dict at evaluation time,
-        so acceptance is exact; the win is dropping non-matching
-        records BEFORE the Python→JVM transfer."""
-        names = {f.name for f in self._schema.fields}
-        for f in filters:
-            col = _filter_column(f)  # Not-aware
-            if _filter_supported(f) and col is not None and col[0] in names:
-                self._filters.append(f)
-            else:
-                yield f
+        # no pushFilters — see MongodumpReader
 
     def partitions(self):
         return [_WarcFilePartition(p) for p in self._files]
@@ -168,14 +148,7 @@ class WarcReader(DataSourceReader):
                         row["_corrupt_record"] = (
                             f"{partition.path}: {err} after {n_ok} records"
                         )
-                        # the marker passes the same filter gate as any
-                        # row — accepted filters are not re-checked by
-                        # Spark and must not leak an all-NULL marker
-                        if all(
-                            _eval_filter(f, row) is True
-                            for f in self._filters
-                        ):
-                            yield tuple(row[n] for n in names)
+                        yield tuple(row[n] for n in names)
                     break
                 try:
                     status, ctype, body = parse_http_response(rec["payload"])
@@ -199,8 +172,7 @@ class WarcReader(DataSourceReader):
                     "_corrupt_record": None,
                 }
                 n_ok += 1
-                if all(_eval_filter(f, row) is True for f in self._filters):
-                    yield tuple(row[n] for n in names)
+                yield tuple(row[n] for n in names)
         finally:
             stream.close()
 
@@ -376,8 +348,5 @@ class WarcWriter(DataSourceWriter):
 
 
 def register_warc(spark) -> None:
-    """Register the source on a session (idempotent) and enable
-    Python-data-source filter pushdown (off by default in Spark 4.1;
-    runtime-settable)."""
-    spark.conf.set("spark.sql.python.filterPushdown.enabled", "true")
+    """Register the source on a session (idempotent)."""
     spark.dataSource.register(WarcDataSource)

@@ -419,11 +419,12 @@ NOTES = {
         "higher-order functions — zero shuffle on the corpus side."
     ),
     "w_crawl_curation": (
-        "End-to-end crawl curation: NO Filter node above `BatchScan "
-        "warc` — the response/200 predicate was accepted by the "
-        "Python source's pushFilters and is enforced before the "
-        "Python→JVM transfer. The per-host cap's exchange is the "
-        "plan's ONLY shuffle, trimmed map-side by WindowGroupLimit."
+        "End-to-end crawl curation: the response/200 predicate is a "
+        "Spark Filter directly above `BatchScan warc` (the Python "
+        "source accepts no pushdown — Spark would reuse an accepting "
+        "reader for later scans that pushed nothing). The per-host "
+        "cap's exchange is the plan's ONLY shuffle, trimmed map-side "
+        "by WindowGroupLimit."
     ),
     "w_warc_source": (
         "File-based crawl ingest: records explode INSIDE the scan "

@@ -1,7 +1,8 @@
 #!/usr/bin/env python
 """Capture .explain("formatted") for named catalog queries into
-plans/r14/<query>_<tag>.txt — the judge-checkable before/after receipts
-for the optimization round.
+plans/r16/<query>_<tag>.txt — the before/after plan receipts of a
+change (run once on the parent commit with TAG=before, once on the
+change with TAG=after, then diff modulo expression ids).
 
 Usage: python scripts/dump_query_plan.py TAG [sf_dir] name [name ...]
 """
@@ -24,7 +25,7 @@ def main() -> int:
         sf_dir, names = args[0], args[1:]
     else:
         sf_dir, names = "/root/testdata/sf0.1", args
-    out_dir = Path(__file__).resolve().parents[1] / "plans" / "r15"
+    out_dir = Path(__file__).resolve().parents[1] / "plans" / "r16"
     out_dir.mkdir(parents=True, exist_ok=True)
     spark = get_spark(app_name="dump_query_plan")
     spark.sparkContext.setLogLevel("ERROR")

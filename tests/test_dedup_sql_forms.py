@@ -1,27 +1,25 @@
-"""SQL-template MinHash builders must equal their Column twins.
+"""MinHash SQL templates against plain-Python references.
 
-r14 construction-cost fix (the pass-12/13 device applied to the
-MinHash signature pipeline): ``with_shingle_column`` and
-``minhash_signatures_narrow`` build their shingle/base-hash/affine
-expressions via one ``F.expr`` parse each. The original Column
-builders (``_shingle_expr``, ``shingle_base_hash``) stay for other
-call sites and as the reference twins pinned here — over empty/short/
-NULL texts, duplicate shingles, unicode, and every affine seed.
+``with_shingle_column``, ``shingles`` and ``minhash_signatures_narrow``
+build their shingle/base-hash/affine expressions as one parsed SQL
+fragment each. This file pins them to references computed with
+``re`` and ``hashlib.md5`` — over empty/short/NULL texts, duplicate
+shingles, unicode, and every affine seed.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import functions as F
+import hashlib
+import re
 
 from mongodb_etl_migration_spark.operators.dedup import (
     MINHASH_P,
-    _shingle_expr,
-    _shingle_expr_sql,
     affine_params,
     minhash_signatures_narrow,
-    shingle_base_hash,
+    shingles,
+    with_shingle_column,
 )
-from mongodb_etl_migration_spark.operators.text import tokens
+from mongodb_etl_migration_spark.operators.text import TOKEN_RE
 
 TEXTS = [
     "the quick brown fox jumps over the lazy dog",
@@ -34,19 +32,42 @@ TEXTS = [
 ]
 
 
+def _ref_shingles(text: str | None, k: int = 3) -> list[str]:
+    """Distinct k-token shingles in first-occurrence order."""
+    toks = re.findall(TOKEN_RE, text.lower()) if text is not None else []
+    out: list[str] = []
+    for i in range(len(toks) - k + 1):
+        sh = " ".join(toks[i : i + k])
+        if sh not in out:
+            out.append(sh)
+    return out
+
+
+def _ref_base_hash(shingle: str) -> int:
+    return int(hashlib.md5(shingle.encode()).hexdigest()[:15], 16) % MINHASH_P
+
+
 def test_shingle_sql_matches_column_form(spark):
+    """with_shingle_column and shingles equal the Python shingler."""
     df = spark.createDataFrame(
         [(i, t) for i, t in enumerate(TEXTS)], "doc_id int, text string"
-    ).select("doc_id", tokens("text").alias("_toks"))
-    rows = df.select(
-        F.expr(_shingle_expr_sql("`_toks`", 3)).alias("s"),
-        _shingle_expr(F.col("_toks"), 3).alias("c"),
-    ).collect()
-    for r in rows:
-        assert r["s"] == r["c"]
+    )
+    arrays = {
+        r["doc_id"]: r["_shingles"]
+        for r in with_shingle_column(df, "doc_id", "text").collect()
+    }
+    rows: dict[int, set[str]] = {}
+    for r in shingles(df, "doc_id", "text").collect():
+        rows.setdefault(r["doc_id"], set()).add(r["shingle"])
+    for i, t in enumerate(TEXTS):
+        want = _ref_shingles(t)
+        assert arrays[i] == want, repr(t)
+        assert rows.get(i, set()) == set(want), repr(t)
 
 
 def test_minhash_narrow_sql_matches_column_form(spark):
+    """Every signature equals min over shingles of (a*h + b) mod p with
+    h the md5-derived base hash; fewer than k tokens → all NULL."""
     df = spark.createDataFrame(
         [(i, t) for i, t in enumerate(TEXTS)], "doc_id int, text string"
     )
@@ -54,23 +75,8 @@ def test_minhash_narrow_sql_matches_column_form(spark):
         r["doc_id"]: r
         for r in minhash_signatures_narrow(df, "doc_id", "text").collect()
     }
-    # Column-form reference: same pipeline built through the original
-    # builders, seed by seed
-    base = df.select(
-        F.col("doc_id"),
-        F.transform(
-            _shingle_expr(tokens("text"), 3), shingle_base_hash
-        ).alias("_h"),
-    )
-    ref_cols = [
-        F.array_min(
-            F.transform(
-                F.col("_h"), lambda h: (F.lit(a) * h + F.lit(b)) % MINHASH_P
-            )
-        ).alias(f"sig_{i}")
-        for i, (a, b) in enumerate(affine_params(16))
-    ]
-    for r in base.select("doc_id", *ref_cols).collect():
-        g = got[r["doc_id"]]
-        for i in range(16):
-            assert g[f"sig_{i}"] == r[f"sig_{i}"], (r["doc_id"], i)
+    for i, t in enumerate(TEXTS):
+        hs = [_ref_base_hash(s) for s in _ref_shingles(t)]
+        for j, (a, b) in enumerate(affine_params(16)):
+            want = min(((a * h + b) % MINHASH_P for h in hs), default=None)
+            assert got[i][f"sig_{j}"] == want, (i, j)

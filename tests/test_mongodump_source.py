@@ -175,9 +175,9 @@ def test_mongodump_streaming_tails_new_files(spark, tmp_path):
 
 
 def test_mongodump_filter_pushdown_enforced(spark, dump_dir):
-    """Accepted filters are enforced in the reader (Spark does not
-    re-apply them), with SQL three-valued semantics; unsupported
-    shapes are handed back."""
+    """Filters over the source keep SQL three-valued semantics, and
+    they are enforced by Spark: the reader accepts no pushdown, so the
+    Filter stays in the plan."""
     from pyspark.sql import functions as F
 
     register_mongodump(spark)
@@ -193,8 +193,36 @@ def test_mongodump_filter_pushdown_enforced(spark, dump_dir):
     assert df.filter(F.col("meta").isNotNull()).count() == 2
     plan = df.filter(F.col("members") == 3)._jdf.queryExecution() \
         .optimizedPlan().toString()
-    # the equality was accepted by pushFilters -> no Spark-side Filter
-    assert "Filter" not in plan
+    assert "Filter" in plan
+
+
+def test_mongodump_filters_do_not_leak_across_plans(spark, tmp_path):
+    """A filter one plan applies must not reach later plans over the
+    same DataFrame. Spark 4.1 hands the reader that accepted a
+    pushdown to every later scan of the relation, including scans
+    that push nothing (a bare count, an OR the source cannot take)."""
+    from pyspark.sql import functions as F
+
+    kinds = ["FOLDER", "FILE", None]
+    (tmp_path / "docs.bson").write_bytes(
+        b"".join(
+            encode_document({"_id": str(i), "type": kinds[i % 3]})
+            for i in range(30)
+        )
+    )
+    register_mongodump(spark)
+    df = (
+        spark.read.format("mongodump")
+        .schema("_id string, type string")
+        .load(str(tmp_path))
+    )
+    folders = df.filter(F.col("type") == "FOLDER")
+    rest = df.filter(F.col("type").isNull() | (F.col("type") != "FOLDER"))
+    assert folders.count() == 10
+    assert df.count() == 30
+    assert rest.count() == 20
+    assert folders.union(rest).count() == 30
+    assert folders.select("_id").join(rest.select("_id"), "_id").count() == 0
 
 
 def test_mongodump_field_skip_pruning(spark, tmp_path):

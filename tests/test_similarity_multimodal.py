@@ -191,8 +191,7 @@ def test_int8_quantize_roundtrip_cosine_close(spark, sf_dir):
         "vec_id",
         "qmax",
         (
-            SIM.dot(F.col("v"), F.col("vd"))
-            / (SIM.norm(F.col("v")) * SIM.norm(F.col("vd")))
+            SIM.dot("v", "vd") / (SIM.norm("v") * SIM.norm("vd"))
         ).alias("cos"),
     ).collect()
     assert all(r.qmax <= 127 for r in stats)

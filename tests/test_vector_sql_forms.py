@@ -1,19 +1,19 @@
-"""SQL-template vector helpers must equal their Column-builder twins.
+"""Vector helpers (one SQL template each) against numpy references.
 
-The r14 construction-cost fix (one ``F.expr`` parse instead of several
-py4j round-trips per higher-order function) keeps BOTH forms in
-``operators/similarity.py``: passing a column NAME takes the SQL
-template, passing a Column takes the original HOF builders. This file
-pins the two forms value-equal over the edge shapes that could diverge
-(empty / NULL / NULL-element / unequal-length arrays, integer inputs,
-negative zero and extreme-exponent plane literals — the repr()-based
-double serialization must round-trip exactly).
+``operators/similarity.py`` builds every vector helper as ONE parsed
+SQL fragment over column NAMES. This file pins those expressions to
+independent numpy/Python references over the edge shapes that could
+go wrong (empty / NULL / NULL-element / unequal-length arrays,
+integer inputs, negative zero and extreme-exponent plane literals —
+the repr()-based double serialization must round-trip exactly), and
+pins ``text.sql_ref`` to the name rules of ``F.col``.
 """
 
 from __future__ import annotations
 
 import math
 
+import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
@@ -23,6 +23,7 @@ from mongodb_etl_migration_spark.operators.similarity import (
     hyperplane_bucket,
     norm,
 )
+from mongodb_etl_migration_spark.operators.text import sql_ref
 
 ROWS = [
     (1, [1.0, 2.0, 3.0], [4.0, 5.0, 6.0]),
@@ -42,6 +43,42 @@ PLANES = [
 ]
 
 
+def _np_dot(a, b):
+    """SQL semantics of aggregate(zip_with(a, b, *), 0.0, +): NULL for a
+    NULL side, an unequal length (zip_with pads NULL) or a NULL element."""
+    if a is None or b is None or len(a) != len(b):
+        return None
+    if any(x is None for x in a) or any(x is None for x in b):
+        return None
+    with np.errstate(over="ignore", under="ignore"):
+        return float(np.sum(np.multiply(a, b, dtype=np.float64)))
+
+
+def _np_norm(a):
+    if a is None or any(x is None for x in a):
+        return None
+    with np.errstate(over="ignore", under="ignore"):
+        sq = np.square(np.asarray(a, dtype=np.float64))
+        return float(np.sqrt(np.sum(sq)))
+
+
+def _np_bucket(v):
+    """Sign bits against PLANES; a NULL dot product takes the '0' branch."""
+    bits = []
+    for p in PLANES:
+        d = _np_dot(v, p)
+        bits.append("1" if d is not None and d >= 0 else "0")
+    return "".join(bits)
+
+
+def _same(got, want):
+    if isinstance(got, float) and isinstance(want, float):
+        return got == want or (math.isnan(got) and math.isnan(want)) or (
+            math.isclose(got, want, rel_tol=1e-12)
+        )
+    return got == want
+
+
 @pytest.fixture(scope="module")
 def vec_df(spark):
     return spark.createDataFrame(
@@ -49,66 +86,56 @@ def vec_df(spark):
     )
 
 
-def _pairs(df, col_sql, col_col):
-    out = df.select("id", col_sql.alias("s"), col_col.alias("c")).collect()
-    return [(r["id"], r["s"], r["c"]) for r in out]
-
-
-def _assert_equal(pairs):
-    for rid, s, c in pairs:
-        if isinstance(s, float) and isinstance(c, float):
-            assert (s == c) or (math.isnan(s) and math.isnan(c)), (rid, s, c)
-        else:
-            assert s == c, (rid, s, c)
-
-
 def test_dot_sql_matches_column_form(vec_df):
-    _assert_equal(_pairs(vec_df, dot("a", "b"), dot(F.col("a"), F.col("b"))))
+    """dot() equals the numpy dot product on every edge row."""
+    for r in vec_df.select("id", "a", "b", dot("a", "b").alias("d")).collect():
+        assert _same(r["d"], _np_dot(r["a"], r["b"])), (r["id"], r["d"])
 
 
 def test_norm_sql_matches_column_form(vec_df):
-    _assert_equal(_pairs(vec_df, norm("a"), norm(F.col("a"))))
+    """norm() equals the numpy L2 norm (inf on overflow, NULL on NULL)."""
+    for r in vec_df.select("id", "a", norm("a").alias("n")).collect():
+        assert _same(r["n"], _np_norm(r["a"])), (r["id"], r["n"])
 
 
 def test_dvec_sql_matches_column_form(spark):
+    """_dvec() casts every element to double, keeping NULLs."""
     df = spark.createDataFrame(
         [(1, [1, 2, 3]), (2, []), (3, None), (4, [-7, None])],
         "id int, a array<int>",
     )
-    out = df.select(
-        _dvec("a").alias("s"), _dvec(F.col("a")).alias("c")
-    ).collect()
+    for r in df.select("a", _dvec("a").alias("v")).collect():
+        want = None if r["a"] is None else [
+            None if x is None else float(x) for x in r["a"]
+        ]
+        assert r["v"] == want
+
+
+def test_hyperplane_bucket_sql_matches_column_form(spark, vec_df):
+    """Bucket bits equal numpy's sign bits — non-NULL vectors, the
+    NULL vector and the unequal-length (NULL dot) plane shapes. The
+    last two vectors sit on a plane's sign boundary, so a plane
+    literal that did not round-trip exactly (1e-300 or
+    0.30000000000000004) would flip their bit."""
+    edge = spark.createDataFrame(
+        [(9, [1.0, -1.0, 0.0]), (10, [-1.0, -1.0, 1.0])],
+        "id int, a array<double>",
+    )
+    out = (
+        vec_df.select("id", "a")
+        .union(edge)
+        .select("id", "a", hyperplane_bucket("a", PLANES).alias("b"))
+        .collect()
+    )
     for r in out:
-        assert r["s"] == r["c"]
-
-
-def test_hyperplane_bucket_sql_matches_column_form(vec_df):
-    good = vec_df.filter(F.col("id").isin(1, 2, 6, 7))  # non-NULL vectors
-    _assert_equal(
-        _pairs(
-            good,
-            hyperplane_bucket("a", PLANES),
-            hyperplane_bucket(F.col("a"), PLANES),
-        )
-    )
-    # NULL vectors: both forms must agree on the NULL-propagation shape
-    nulls = vec_df.filter(F.col("id") == 3)
-    _assert_equal(
-        _pairs(
-            nulls,
-            hyperplane_bucket("a", PLANES),
-            hyperplane_bucket(F.col("a"), PLANES),
-        )
-    )
+        assert r["b"] == _np_bucket(r["a"]), (r["id"], r["b"])
+    got = {r["id"]: r["b"] for r in out}
+    assert (got[1], got[9], got[10]) == ("101", "100", "101")
 
 
 def test_dotted_names_fall_back_to_column_path(spark):
-    """ADVICE r14: a name containing '.' previously resolved as a
-    nested-field reference under F.col but the SQL fast path turned
-    it into a literal backticked column — the helpers must route
-    non-simple names through the Column builders."""
-    from mongodb_etl_migration_spark.operators.similarity import dot, norm
-
+    """A dotted name resolves a nested field exactly like F.col (the
+    helpers render names through sql_ref)."""
     df = spark.createDataFrame(
         [(1, ([1.0, 2.0], [3.0, 4.0]))],
         "id int, s struct<vec:array<double>, w:array<double>>",
@@ -118,14 +145,35 @@ def test_dotted_names_fall_back_to_column_path(spark):
         norm("s.vec").alias("n"),
         _dvec("s.vec").alias("v"),
         hyperplane_bucket("s.vec", PLANES).alias("b"),
-        dot(F.col("s.vec"), F.col("s.w")).alias("d_c"),
-        norm(F.col("s.vec")).alias("n_c"),
-        hyperplane_bucket(F.col("s.vec"), PLANES).alias("b_c"),
     ).collect()[0]
-    assert out["d"] == out["d_c"] == 11.0
-    assert out["n"] == out["n_c"]
+    assert out["d"] == 11.0
+    assert out["n"] == _np_norm([1.0, 2.0])
     assert out["v"] == [1.0, 2.0]
-    assert out["b"] == out["b_c"]
+    assert out["b"] == _np_bucket([1.0, 2.0])
+
+
+def test_sql_ref_matches_f_col(spark):
+    """sql_ref renders a name exactly as F.col parses it: a nested
+    struct field, a backticked top-level column whose name holds a
+    dot, a name with a space, and an embedded doubled backtick."""
+    df = spark.createDataFrame(
+        [((1,), 2, 3, 4)],
+        "s struct<x:int>, `a.b` int, `a b` int, `we``ird` int",
+    )
+    cases = {
+        "s.x": "`s`.`x`",
+        "`a.b`": "`a.b`",
+        "a b": "`a b`",
+        "`we``ird`": "`we``ird`",
+    }
+    for name, rendered in cases.items():
+        assert sql_ref(name) == rendered
+        want = df.select(F.col(name).alias("v")).collect()
+        got = df.select(F.expr(sql_ref(name)).alias("v")).collect()
+        assert got == want, name
+    for bad in ("a..b", "`a", "`a`b", "a."):
+        with pytest.raises(ValueError):
+            sql_ref(bad)
 
 
 def test_nonfinite_plane_literals_match_column_form(spark):

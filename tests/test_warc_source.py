@@ -107,6 +107,19 @@ def test_source_filter_pushdown_semantics(spark, shard_dir):
     assert max(r.record_idx for r in rows) > len(rows) / 2
 
 
+def test_source_filters_do_not_leak_across_plans(spark, tmp_path):
+    """Same contract as the mongodump source: a filter one plan
+    applies never reaches a later plan over the same DataFrame."""
+    p = tmp_path / "t.warc"
+    p.write_bytes(W.build_warc(_mixed_records(9)))
+    df = _read(spark, str(p))
+    n = len(W.parse_warc(p.read_bytes()))
+    assert df.filter("warc_type = 'response'").count() == 6
+    assert df.count() == n
+    rest = df.filter("warc_type <> 'response' OR warc_type IS NULL")
+    assert rest.count() == n - 6
+
+
 def test_source_failfast_on_corrupt_member(spark, tmp_path):
     recs = _mixed_records(4, "c")
     gz = bytearray(W.build_warc_gz(recs))
